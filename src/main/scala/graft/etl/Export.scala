@@ -115,34 +115,24 @@ object Export {
       spark: SparkSession,
       store: GraftStore,
       maxLeavesPerBucket: Int = 1,
-      maxAttempts: Int = 3): Int = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snapshot = store.currentLeaves() // the ONE resolution
+      maxAttempts: Int = 3): Int =
+    store.retryOnStale(maxAttempts) {
+      val snapshot = store.snapshot() // the ONE resolution
       val (adds, drops) = store.Tables.map { table =>
-        val mine = snapshot.filter(_.table == store.physName(table))
+        val mine = snapshot.leavesOf(table)
         val crowded = mine.groupBy(_.bucket)
           .filter(_._2.size > maxLeavesPerBucket).keySet
         if (crowded.isEmpty) (Nil, Nil)
         else {
           val victims = mine.filter(l => crowded(l.bucket))
-          (store.stage(table, store.readLeaves(spark, table, victims)),
+          (store.stage(table, snapshot.read(spark, table, victims)),
             victims)
         }
       }.unzip
       val dropped = drops.flatten
-      if (dropped.isEmpty) return 0
-      try {
-        store.commit(adds.flatten, dropped)
-        return dropped.size
-      } catch {
-        case _: GraftStore.StaleSnapshotException if attempt < maxAttempts =>
-        // loop: recompute from a fresh snapshot
-      }
+      if (dropped.nonEmpty) store.commit(adds.flatten, dropped)
+      dropped.size
     }
-    0
-  }
 
   /** Drop every leaf whose entire bucket is older than the cutoff: a
     * metadata-only commit (no data rewrite) — the scale-correct TTL. A

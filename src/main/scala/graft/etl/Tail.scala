@@ -34,26 +34,34 @@ object Tail {
   /** Rollback all heights >= `height` across the three tables by
     * rewriting only the buckets that contain them (OP-DEL-1/OP-DEL-2).
     * The `tip` metadata moves to height-1 in the same atomic commit, so
-    * the O(1) resume cursor never points above live data. */
+    * the O(1) resume cursor never points above live data. A concurrent
+    * commit that drops a leaf this rollback read (an [[Export.compact]]
+    * landing between its leaf list and its commit) makes the commit
+    * stale; the rollback then starts again from a fresh snapshot, three
+    * attempts in all. */
   def rollbackFrom(spark: SparkSession, store: GraftStore,
-      height: Long): Unit = {
-    val (adds, drops) = store.Tables.map { table =>
-      // ONE leaf list drives both the read and the drop set (a pred-based
-      // re-resolve could interleave with a concurrent commit), pruned by
-      // manifest footer stats: a leaf whose max height sits below the
-      // rollback point contains nothing to delete and is neither read nor
-      // rewritten — only the actual tail leaves churn
-      val affected = store.leavesForHeights(table, height, Long.MaxValue)
-      if (affected.isEmpty) (Nil, Nil)
-      else {
-        val kept = store.readLeaves(spark, table, affected)
-          .filter(col(store.heightCol(table)) < height)
-        (store.stage(table, kept), affected)
-      }
-    }.unzip
-    store.commit(adds.flatten, drops.flatten,
-      meta = Map("tip" -> (height - 1).toString))
-  }
+      height: Long): Unit =
+    store.retryOnStale(maxAttempts = 3) {
+      val snapshot = store.snapshot() // the ONE resolution
+      val (adds, drops) = store.Tables.map { table =>
+        // ONE leaf list drives both the read and the drop set (a
+        // pred-based re-resolve could interleave with a concurrent
+        // commit), pruned by manifest footer stats: a leaf whose max
+        // height sits below the rollback point contains nothing to delete
+        // and is neither read nor rewritten — only the actual tail leaves
+        // churn
+        val affected = snapshot.leavesForHeights(table, height,
+          Long.MaxValue)
+        if (affected.isEmpty) (Nil, Nil)
+        else {
+          val kept = snapshot.read(spark, table, affected)
+            .filter(col(store.heightCol(table)) < height)
+          (store.stage(table, kept), affected)
+        }
+      }.unzip
+      store.commit(adds.flatten, drops.flatten,
+        meta = Map("tip" -> (height - 1).toString))
+    }
 
   /** Process one new head; returns the action taken. Driver-side point
     * lookups (stored tip hash) are single-row reads on the control path —

@@ -23,9 +23,18 @@ import org.json4s.jackson.JsonMethods
   * has advanced, and the DATA plane stays on the executor-side batched
   * HTTP fetch (the reference consumes its subscription the same way,
   * etl.rs:128-173: the notification triggers a fetch, it is not the
-  * record of truth). Connect retries mirror provider.rs:25-38. */
+  * record of truth). Connect retries mirror provider.rs:25-38.
+  *
+  * A connection the node dropped without the client noticing (the JDK
+  * client can miss an abrupt TCP close and never call onClose or
+  * onError) is caught by a heartbeat: after `heartbeatMs` without a
+  * frame from the node, a poll pings it, and a ping still unanswered
+  * after [[WsHeads.PongTimeoutHeartbeats]] heartbeats counts as a lost
+  * connection. */
 final class WsHeads(url: String, namespace: String = "xcb",
-    retries: Int = 5, retryBackoffMs: Long = 200L) extends AutoCloseable {
+    retries: Int = 5, retryBackoffMs: Long = 200L,
+    heartbeatMs: Long = WsHeads.HeartbeatMs) extends AutoCloseable {
+  private val pongTimeoutMs = heartbeatMs * WsHeads.PongTimeoutHeartbeats
 
   private val headers = new LinkedBlockingQueue[JValue]()
   @volatile private var subscriptionId: Option[String] = None
@@ -35,6 +44,12 @@ final class WsHeads(url: String, namespace: String = "xcb",
     * next poll reconnects and resubscribes, or throws if it can't. */
   @volatile private var connectionLost: Option[String] = None
   @volatile private var closedByUs = false
+  /** When the current connection last heard from the node, and when the
+    * heartbeat ping still waiting for its pong went out (nanoTime). */
+  @volatile private var lastHeard = System.nanoTime()
+  @volatile private var pingSent: Option[Long] = None
+
+  private def heard(): Unit = { lastHeard = System.nanoTime(); pingSent = None }
 
   private def handleMessage(text: String): Unit = {
     val j = JsonMethods.parse(text)
@@ -65,8 +80,15 @@ final class WsHeads(url: String, namespace: String = "xcb",
     private val buf = new StringBuilder
     override def onText(ws: java.net.http.WebSocket,
         data: CharSequence, last: Boolean): CompletionStage[_] = {
+      if (gen == generation.get()) heard()
       buf.append(data)
       if (last) { val t = buf.toString(); buf.setLength(0); handleMessage(t) }
+      ws.request(1)
+      null
+    }
+    override def onPong(ws: java.net.http.WebSocket,
+        message: java.nio.ByteBuffer): CompletionStage[_] = {
+      if (gen == generation.get()) heard()
       ws.request(1)
       null
     }
@@ -113,6 +135,7 @@ final class WsHeads(url: String, namespace: String = "xcb",
             throw e
         }
         sock = s
+        heard()
       } catch {
         case e: Throwable =>
           last = e
@@ -136,12 +159,48 @@ final class WsHeads(url: String, namespace: String = "xcb",
   def subscription: Option[String] = subscriptionId
 
   /** Drain every header notification received so far (non-blocking);
-    * optionally wait up to `waitMs` for the first one. Throws if the
-    * node REJECTED the subscription — a stalled-forever silent stream
-    * is the alternative. */
+    * optionally wait up to `waitMs` for the first one, keeping the
+    * connection alive (heartbeat, reconnect) while waiting. Throws if the
+    * node REJECTED the subscription — a stalled-forever silent stream is
+    * the alternative. */
   def pollHeaders(waitMs: Long = 0L): Seq[JValue] = {
+    val deadline = System.nanoTime() + waitMs * 1000000L
+    var first: JValue = null
+    var waiting = true
+    while (waiting) {
+      keepAlive()
+      val leftMs = (deadline - System.nanoTime()) / 1000000L
+      first =
+        if (leftMs > 0)
+          headers.poll(math.min(leftMs, heartbeatMs), TimeUnit.MILLISECONDS)
+        else headers.poll()
+      waiting = first == null && leftMs > 0
+    }
+    val out = Seq.newBuilder[JValue]
+    if (first != null) {
+      out += first
+      var next = headers.poll()
+      while (next != null) { out += next; next = headers.poll() }
+    }
+    out.result()
+  }
+
+  /** Throw on a rejected subscribe, run the heartbeat, and replace a lost
+    * connection. */
+  private def keepAlive(): Unit = {
     subscribeError.foreach(e => throw new RuntimeException(
       s"${namespace}_subscribe(newHeads) rejected by $url: $e"))
+    val now = System.nanoTime()
+    pingSent match {
+      case Some(t) if now - t > pongTimeoutMs * 1000000L =>
+        connectionLost = connectionLost.orElse(
+          Some(s"no pong within $pongTimeoutMs ms"))
+      case None if now - lastHeard > heartbeatMs * 1000000L =>
+        // a failed send needs no handling: its pong never comes either
+        pingSent = Some(now)
+        ws.sendPing(java.nio.ByteBuffer.allocate(0))
+      case _ => ()
+    }
     // dropped connection: reconnect-and-resubscribe (bounded retries;
     // throws if the node stays unreachable). Heads pushed during the
     // gap are fine to miss — the consumer treats notifications as an
@@ -156,16 +215,6 @@ final class WsHeads(url: String, namespace: String = "xcb",
             "failed", e)
       }
     }
-    val out = Seq.newBuilder[JValue]
-    val first =
-      if (waitMs > 0) headers.poll(waitMs, TimeUnit.MILLISECONDS)
-      else headers.poll()
-    if (first != null) {
-      out += first
-      var next = headers.poll()
-      while (next != null) { out += next; next = headers.poll() }
-    }
-    out.result()
   }
 
   override def close(): Unit = {
@@ -174,4 +223,17 @@ final class WsHeads(url: String, namespace: String = "xcb",
       .join()
     catch { case _: Throwable => () }
   }
+}
+
+object WsHeads {
+  /** Silence after which a poll pings the node: a few bytes per idle
+    * interval. */
+  val HeartbeatMs = 2000L
+
+  /** Heartbeats a ping may go unanswered before the connection counts as
+    * lost: 30 s at the default. Generous: it only bounds how long a drop
+    * the client was never told of goes unnoticed, while a pong can lag by
+    * seconds behind a busy node or a starved client, and each false alarm
+    * costs a reconnect. */
+  val PongTimeoutHeartbeats = 15
 }

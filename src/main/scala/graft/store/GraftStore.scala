@@ -6,6 +6,7 @@ import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -20,7 +21,9 @@ import scala.jdk.CollectionConverters._
   *  - a snapshot file lists every live (table, bucket, dir) triple;
   *  - `_current` is swapped by atomic rename — one commit covers all
   *    tables, so a reader never observes a block without its transactions;
-  *  - readers resolve `_current` once per query → snapshot isolation;
+  *  - readers resolve `_current` once per query → snapshot isolation:
+  *    the leaves, metadata, footer stats and schemas a read uses all come
+  *    from that one snapshot file;
   *  - mutations (reorg OP-DEL-1/2, retention OP-DEL-3) stage replacement
   *    leaves for the affected buckets and drop the originals in the same
   *    commit — untouched buckets are never rewritten.
@@ -29,6 +32,16 @@ import scala.jdk.CollectionConverters._
   * parquet readable in any combination. Snapshot metadata is O(live
   * leaves), driver-only — the manifest-pointer design Iceberg/Delta use
   * at petabyte scale, reduced to this engine's needs.
+  *
+  * Each leaf this instance stages also records its Spark schema, taken
+  * from the parquet footers the stats pass already opens: the snapshot
+  * holds a schema dictionary (`#schema` lines) and each leaf's `#stats`
+  * line names its entry. A read whose leaves all carry one recorded
+  * schema hands it to the parquet reader, which then skips the
+  * schema-inference job (a footer read in a task) it would otherwise run
+  * before the query's own job. Any other leaf set — a legacy snapshot,
+  * leaves staged by another process, mixed schemas, leaves no longer in
+  * the snapshot being read — is read with inference, as before.
   */
 final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     val tablesPrefix: String = "", val zOrderTransfers: Boolean = false) {
@@ -52,8 +65,7 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     else phys
 
   /** Live leaves of one logical table (this instance's namespace). */
-  def leavesOf(table: String): Seq[Leaf] =
-    currentLeaves().filter(_.table == physName(table))
+  def leavesOf(table: String): Seq[Leaf] = snapshot().leavesOf(table)
 
   /** Live leaves belonging to this instance across all its tables. */
   def ownLeaves(): Seq[Leaf] = {
@@ -72,9 +84,11 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
   /** Per-leaf footer statistics carried in the snapshot manifest:
     * row count, and min/max of the table's height column for the chain
     * tables (None for keyed index tables and for leaves whose footers
-    * lacked usable column statistics). */
+    * lacked usable column statistics), and the JSON of the Spark schema
+    * every footer of the leaf carries (None when they disagree or carry
+    * none). */
   final case class LeafStats(rows: Long, minH: Option[Long],
-      maxH: Option[Long])
+      maxH: Option[Long], schemaJson: Option[String] = None)
 
   private def rootPath: Path = Paths.get(root)
   private def currentPtr: Path = rootPath.resolve("_current")
@@ -82,58 +96,99 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
   Files.createDirectories(rootPath)
 
   private val MetaPrefix = "#meta\t"
+  private val StatsPrefix = "#stats\t"
+  private val SchemaPrefix = "#schema\t"
 
-  private def snapshotLines(): Seq[String] =
-    currentSnapshot() match {
-      case None => Nil
-      case Some(name) =>
-        Files.readAllLines(rootPath.resolve(name), StandardCharsets.UTF_8)
-          .asScala.toSeq.filter(_.nonEmpty)
-    }
-
-  def currentLeaves(): Seq[Leaf] =
-    snapshotLines().filterNot(_.startsWith("#")).map { l =>
+  /** One parsed snapshot file. Leaves, metadata and stats are parsed on
+    * first use, so a caller that needs only one of them pays only for
+    * that one, and a caller that needs several reads the file once.
+    *
+    * A multi-step operation that takes its leaf lists from one Snapshot
+    * and reads them through [[Snapshot.read]] sees that snapshot
+    * throughout: leaves, footer stats and recorded schemas all come from
+    * the same file, whatever commits land meanwhile. */
+  final class Snapshot private[store] (lines: Seq[String]) {
+    lazy val leaves: Seq[Leaf] = lines.filterNot(_.startsWith("#")).map { l =>
       val Array(t, b, d) = l.split("\t", 3)
       Leaf(t, b.toLong, d)
     }
+
+    lazy val meta: Map[String, String] =
+      lines.filter(_.startsWith(MetaPrefix)).map { l =>
+        val Array(_, k, v) = l.split("\t", 3)
+        k -> v
+      }.toMap
+
+    lazy val stats: Map[String, LeafStats] = {
+      // "#schema\tid\tjson" — the dictionary the stats lines point into
+      val schemas = lines.filter(_.startsWith(SchemaPrefix)).map { l =>
+        val Array(_, id, json) = l.split("\t", 3)
+        id -> json
+      }.toMap
+      lines.filter(_.startsWith(StatsPrefix)).map { l =>
+        // "#stats\tdir\trows\tmin\tmax[\tschemaId]" — min/max empty for
+        // keyed tables; no schema id in snapshots written before schemas
+        // were recorded, or for a leaf without one
+        val p = l.split("\t", -1)
+        def opt(i: Int) = if (p.length > i && p(i).nonEmpty) Some(p(i)) else None
+        p(1) -> LeafStats(p(2).toLong, opt(3).map(_.toLong),
+          opt(4).map(_.toLong), opt(5).flatMap(schemas.get))
+      }.toMap
+    }
+
+    /** Live leaves of one logical table in this snapshot. */
+    def leavesOf(table: String): Seq[Leaf] =
+      leaves.filter(_.table == physName(table))
+
+    /** [[GraftStore.leavesForHeights]] in this snapshot. */
+    def leavesForHeights(table: String, lo: Long, hi: Long): Seq[Leaf] =
+      leaves.filter { l =>
+        l.table == physName(table) &&
+          l.bucket >= lo / bucketSize && l.bucket <= hi / bucketSize &&
+          stats.get(l.dir).forall(s =>
+            s.minH.forall(_ <= hi) && s.maxH.forall(_ >= lo))
+      }
+
+    /** [[GraftStore.readLeaves]] with the schemas this snapshot records:
+      * a leaf it does not list is read with schema inference. */
+    def read(spark: SparkSession, table: String,
+        leaves: Seq[Leaf]): DataFrame =
+      readWith(spark, table, leaves, stats)
+  }
+
+  /** The snapshot `_current` points to, read once (empty before the first
+    * commit). */
+  def snapshot(): Snapshot =
+    currentSnapshot().fold(new Snapshot(Nil))(manifestAt)
+
+  private def manifestAt(snapshot: String): Snapshot = {
+    val f = rootPath.resolve(snapshot)
+    require(Files.exists(f), s"snapshot $snapshot not found (vacuumed?)")
+    new Snapshot(Files.readAllLines(f, StandardCharsets.UTF_8).asScala
+      .toSeq.filter(_.nonEmpty))
+  }
+
+  def currentLeaves(): Seq[Leaf] = snapshot().leaves
 
   /** Snapshot-scoped key/value metadata, committed atomically WITH the
     * leaves — e.g. the ingest tip height ([[graft.etl.Backfill]] key
     * `tip`): readers get an O(1) resume cursor / maturity watermark that
     * can never run ahead of or behind the data it describes. Keys are
     * namespaced by [[tablesPrefix]] like tables. */
-  def currentMeta(): Map[String, String] =
-    snapshotLines().filter(_.startsWith(MetaPrefix)).map { l =>
-      val Array(_, k, v) = l.split("\t", 3)
-      k -> v
-    }.toMap
+  def currentMeta(): Map[String, String] = snapshot().meta
 
   def metaKey(key: String): String =
     if (tablesPrefix.isEmpty) key else s"${tablesPrefix}_$key"
 
-  private val StatsPrefix = "#stats\t"
-
   /** Leaf statistics of the CURRENT snapshot, keyed by leaf dir. Absent
     * entries (legacy snapshots, leaves staged by a different process)
     * mean "no information" — every consumer must treat a missing entry
-    * as "keep the leaf". */
-  def currentStats(): Map[String, LeafStats] = parseStats(snapshotLines())
+    * as "keep the leaf" (and read it with schema inference). */
+  def currentStats(): Map[String, LeafStats] = snapshot().stats
 
   /** Leaf statistics as of an explicit snapshot file. */
-  def statsAt(snapshot: String): Map[String, LeafStats] = {
-    val f = rootPath.resolve(snapshot)
-    require(Files.exists(f), s"snapshot $snapshot not found (vacuumed?)")
-    parseStats(Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq)
-  }
-
-  private def parseStats(lines: Seq[String]): Map[String, LeafStats] =
-    lines.filter(_.startsWith(StatsPrefix)).map { l =>
-      // "#stats\tdir\trows\tmin\tmax" — min/max empty for keyed tables
-      val p = l.split("\t", -1)
-      p(1) -> LeafStats(p(2).toLong,
-        if (p(3).isEmpty) None else Some(p(3).toLong),
-        if (p(4).isEmpty) None else Some(p(4).toLong))
-    }.toMap
+  def statsAt(snapshot: String): Map[String, LeafStats] =
+    manifestAt(snapshot).stats
 
   /** Footer stats for leaves THIS instance staged but has not yet
     * committed — moved into the snapshot manifest by [[commit]]. Keyed
@@ -193,10 +248,17 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
       s"${UUID.randomUUID().toString.take(8)}.txt"
     val metaLines = meta.toSeq.sorted.map { case (k, v) => s"$MetaPrefix$k\t$v" }
     val sorted = leaves.sortBy(l => (l.table, l.bucket, l.dir))
-    val statLines = sorted.flatMap(l => stats.get(l.dir).map(s =>
-      s"$StatsPrefix${l.dir}\t${s.rows}\t${s.minH.getOrElse("")}\t" +
-        s"${s.maxH.getOrElse("")}"))
-    val body = (metaLines ++ statLines ++
+    val liveStats = sorted.flatMap(l => stats.get(l.dir).map(l.dir -> _))
+    // one dictionary entry per distinct schema among the live leaves
+    val schemaIds = liveStats.flatMap(_._2.schemaJson).distinct.zipWithIndex
+    val schemaLines = schemaIds.map { case (json, id) =>
+      s"$SchemaPrefix$id\t$json" }
+    val idOf = schemaIds.toMap
+    val statLines = liveStats.map { case (dir, s) =>
+      s"$StatsPrefix$dir\t${s.rows}\t${s.minH.getOrElse("")}\t" +
+        s"${s.maxH.getOrElse("")}" + s.schemaJson.fold("")(j => s"\t${idOf(j)}")
+    }
+    val body = (metaLines ++ schemaLines ++ statLines ++
       sorted.map(l => s"${l.table}\t${l.bucket}\t${l.dir}")).mkString("\n")
     // The snapshot body goes through its own tmp-then-atomic-move: a
     // crash mid-write must never leave a TORN file under the snapshot-*
@@ -303,6 +365,8 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     // Spark job, no data page touched (the lakehouse write-side stats
     // pass). Chain tables get min/max of their height column so reads
     // can prune below bucket granularity; keyed tables get row counts.
+    // Every leaf also gets the Spark schema its footers carry, so reads
+    // skip schema inference.
     // Footers are read on a BOUNDED pool, not sequentially. On the
     // local fs this is nearly free either way (measured ~0.1 ms/footer
     // page-cached at the scale sweep's 100× point, 2 048 files), but a
@@ -343,10 +407,15 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * min/max are None unless EVERY non-empty row group contributed
     * either column statistics or provably-all-null rows (a null height
     * can never match a height predicate, so all-null groups don't widen
-    * the range) — a partial range would prune rows it doesn't cover. */
+    * the range) — a partial range would prune rows it doesn't cover.
+    * The schema is the Spark schema Spark's writer put in the footers'
+    * key/value metadata, made nullable as every parquet read makes it —
+    * what inference would return — and None unless every footer carries
+    * the same one. */
   private def footerStats(dir: Path, field: Option[String]): LeafStats = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
     val conf = new org.apache.hadoop.conf.Configuration()
     def files(p: Path): Seq[Path] =
       if (Files.isDirectory(p)) listDir(p).flatMap(files)
@@ -355,31 +424,41 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     var mn = Option.empty[Long]
     var mx = Option.empty[Long]
     var complete = true
-    files(dir).foreach { f =>
+    val schemas = files(dir).map { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(f.toUri), conf))
-      try r.getFooter.getBlocks.asScala.foreach { b =>
-        rows += b.getRowCount
-        field.foreach { hc =>
-          val st = b.getColumns.asScala
-            .find(_.getPath.toDotString == hc).map(_.getStatistics)
-          st match {
-            case Some(s) if s != null && s.hasNonNullValue =>
-              (s.genericGetMin, s.genericGetMax) match {
-                case (lo: Number, hi: Number) =>
-                  mn = Some(mn.fold(lo.longValue)(math.min(_, lo.longValue)))
-                  mx = Some(mx.fold(hi.longValue)(math.max(_, hi.longValue)))
-                case _ => if (b.getRowCount > 0) complete = false
-              }
-            case Some(s) if s != null && s.isNumNullsSet &&
-                s.getNumNulls == b.getRowCount => // all-null group: inert
-            case _ => if (b.getRowCount > 0) complete = false
+      try {
+        val footer = r.getFooter
+        footer.getBlocks.asScala.foreach { b =>
+          rows += b.getRowCount
+          field.foreach { hc =>
+            val st = b.getColumns.asScala
+              .find(_.getPath.toDotString == hc).map(_.getStatistics)
+            st match {
+              case Some(s) if s != null && s.hasNonNullValue =>
+                (s.genericGetMin, s.genericGetMax) match {
+                  case (lo: Number, hi: Number) =>
+                    mn = Some(mn.fold(lo.longValue)(math.min(_, lo.longValue)))
+                    mx = Some(mx.fold(hi.longValue)(math.max(_, hi.longValue)))
+                  case _ => if (b.getRowCount > 0) complete = false
+                }
+              case Some(s) if s != null && s.isNumNullsSet &&
+                  s.getNumNulls == b.getRowCount => // all-null group: inert
+              case _ => if (b.getRowCount > 0) complete = false
+            }
           }
         }
+        Option(footer.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
       } finally r.close()
+    }.distinct
+    val schema = schemas match {
+      case Seq(Some(json)) => scala.util.Try(DataType.fromJson(json))
+        .toOption.collect { case st: StructType => GraftStore.nullable(st).json }
+      case _ => None
     }
-    if (field.isDefined && complete) LeafStats(rows, mn, mx)
-    else LeafStats(rows, None, None)
+    if (field.isDefined && complete) LeafStats(rows, mn, mx, schema)
+    else LeafStats(rows, None, None, schema)
   }
 
   /** One atomic commit across tables; `meta` entries merge into (and
@@ -390,7 +469,8 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * (e.g. a compaction racing a reorg rollback) would otherwise silently
     * resurrect rows another commit deleted, or lose rows a concurrent
     * append added to a leaf it never read. Such a commit throws
-    * [[GraftStore.StaleSnapshotException]] — retry from a fresh snapshot. */
+    * [[GraftStore.StaleSnapshotException]] — retry from a fresh snapshot
+    * ([[retryOnStale]]). */
   def commit(adds: Seq[Leaf], drops: Seq[Leaf] = Nil,
       meta: Map[String, String] = Map.empty): Unit =
     // The read-modify-write of `_current` must be exclusive across EVERY
@@ -404,11 +484,14 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     // object store there is no lock primitive, which is why lakehouse
     // formats put this compare-and-swap in a catalog service at scale).
     withCommitLock {
-      val live = currentLeaves()
+      val current = snapshot()
+      val live = current.leaves
       val liveDirs = live.map(_.dir).toSet
       val stale = drops.filterNot(l => liveDirs.contains(l.dir))
+      def abandon(msg: String): Nothing =
+        throw new GraftStore.StaleSnapshotException(msg, adds.map(_.dir))
       if (stale.nonEmpty)
-        throw new GraftStore.StaleSnapshotException(
+        abandon(
           s"${stale.size} drop(s) no longer live " +
             s"(first: ${stale.head.dir}); " +
             "recompute from a fresh snapshot and retry")
@@ -421,21 +504,37 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
       val vanished = adds.filterNot(l =>
         Files.exists(rootPath.resolve(l.dir)))
       if (vanished.nonEmpty)
-        throw new GraftStore.StaleSnapshotException(
+        abandon(
           s"${vanished.size} staged leaf dir(s) no longer on disk " +
             s"(first: ${vanished.head.dir}) — a vacuum with too short a " +
             "grace window reclaimed them mid-stage; re-stage and retry " +
             "(and raise vacuum graceMs above stage-to-commit latency)")
       val dropSet = drops.map(_.dir).toSet
       // stats: retained leaves keep their published entries; adds bring
-      // the footer stats writeLeaves collected at stage time (absent when
-      // a DIFFERENT process staged them — readers then just keep the leaf)
+      // the footer stats and schema writeLeaves collected at stage time
+      // (absent when a DIFFERENT process staged them — readers then just
+      // keep the leaf and infer its schema)
       val addStats = adds.flatMap(l =>
         Option(pendingStats.get(l.dir)).map(l.dir -> _)).toMap
       publish(live.filterNot(l => dropSet.contains(l.dir)) ++ adds,
-        currentMeta() ++ meta.map { case (k, v) => metaKey(k) -> v },
-        currentStats() ++ addStats)
+        current.meta ++ meta.map { case (k, v) => metaKey(k) -> v },
+        current.stats ++ addStats)
       adds.foreach(l => pendingStats.remove(l.dir))
+    }
+
+  /** Run `attempt` — plan from a fresh snapshot, stage, commit — and run
+    * it again while its commit throws
+    * [[GraftStore.StaleSnapshotException]], up to `maxAttempts` runs in
+    * all; the last run's failure propagates. Leaves an aborted run staged
+    * were never published: this instance forgets their stage-time stats,
+    * and [[vacuum]] reclaims their dirs. */
+  def retryOnStale[T](maxAttempts: Int)(attempt: => T): T =
+    try attempt
+    catch {
+      case e: GraftStore.StaleSnapshotException =>
+        e.stagedDirs.foreach(pendingStats.remove)
+        if (maxAttempts > 1) retryOnStale(maxAttempts - 1)(attempt)
+        else throw e
     }
 
   /** JVM lock + `_commitlock` OS file lock around `body` — the exclusion
@@ -465,20 +564,15 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * writes a NEW snapshot file and leaves are immutable, so any snapshot
     * name from [[snapshots]] replays that exact version until [[vacuum]]
     * reclaims it. */
-  def leavesAt(snapshot: String): Seq[Leaf] = {
-    val f = rootPath.resolve(snapshot)
-    require(Files.exists(f), s"snapshot $snapshot not found (vacuumed?)")
-    Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { l =>
-        val Array(t, b, d) = l.split("\t", 3)
-        Leaf(t, b.toLong, d)
-      }
-  }
+  def leavesAt(snapshot: String): Seq[Leaf] = manifestAt(snapshot).leaves
 
-  /** Snapshot-pinned read of `table` at a historic version. */
-  def readAt(spark: SparkSession, table: String, snapshot: String): DataFrame =
-    readLeaves(spark, table, leavesAt(snapshot))
+  /** Snapshot-pinned read of `table` at a historic version; schemas come
+    * from that version's own manifest. */
+  def readAt(spark: SparkSession, table: String,
+      snapshot: String): DataFrame = {
+    val s = manifestAt(snapshot)
+    s.read(spark, table, s.leaves)
+  }
 
   /** Manifest diff between two committed versions: (added, removed)
     * leaves across every table in the root. Leaf dirs are immutable and
@@ -656,29 +750,47 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
   /** Snapshot-isolated read; `bucketPred` prunes leaves before Spark ever
     * lists a file (the manifest-level analogue of partition pruning). */
   def read(spark: SparkSession, table: String,
-      bucketPred: Long => Boolean = _ => true): DataFrame =
-    readLeaves(spark, table,
-      currentLeaves().filter(l =>
-        l.table == physName(table) && bucketPred(l.bucket)))
+      bucketPred: Long => Boolean = _ => true): DataFrame = {
+    val s = snapshot()
+    s.read(spark, table, s.leaves.filter(l => bucketPred(l.bucket)))
+  }
 
-  /** Read `table` from an explicit leaf list the CALLER snapshotted (extra
-    * leaves of other tables are ignored). The building block for
-    * multi-step operations that must see one snapshot across several
-    * reads — compaction reads exactly the leaves it will drop
-    * ([[graft.etl.Export.compact]]), and a multi-table export serves every
-    * table from the same snapshot ([[JdbcSink.export]]) — where chaining
-    * [[read]] calls would re-resolve `_current` each time and interleave
-    * with concurrent commits. */
+  /** Read `table` from an explicit leaf list the caller took (extra
+    * leaves of other tables are ignored). Recorded schemas are looked up
+    * in the current snapshot: a leaf that is no longer live is read with
+    * schema inference. A multi-step operation that must see one snapshot
+    * across its leaf lists and reads — compaction reads exactly the
+    * leaves it will drop ([[graft.etl.Export.compact]]), a multi-table
+    * export serves every table from one snapshot ([[JdbcSink.export]]) —
+    * takes its leaves from [[snapshot]] and reads through
+    * [[Snapshot.read]] instead, where chaining [[read]] calls would
+    * re-resolve `_current` each time and interleave with concurrent
+    * commits. */
   def readLeaves(spark: SparkSession, table: String,
-      leaves: Seq[Leaf]): DataFrame = {
-    val dirs = leaves.filter(_.table == physName(table))
-      .map(l => s"$root/${l.dir}")
+      leaves: Seq[Leaf]): DataFrame =
+    snapshot().read(spark, table, leaves)
+
+  /** Read `table`'s share of `leaves`; `stats` supplies the recorded
+    * schemas. */
+  private def readWith(spark: SparkSession, table: String, leaves: Seq[Leaf],
+      stats: Map[String, LeafStats]): DataFrame = {
+    val mine = leaves.filter(_.table == physName(table))
     // Leaves are plain parquet (all real columns in the data files);
     // recursiveFileLookup disables k=v discovery, so heterogeneous leaf
     // sets from different segments read uniformly. Pruning happens at the
     // manifest level above.
-    if (dirs.isEmpty) emptyLike(spark, table)
-    else spark.read.option("recursiveFileLookup", "true").parquet(dirs: _*)
+    if (mine.isEmpty) emptyLike(spark, table)
+    else {
+      val reader = spark.read.option("recursiveFileLookup", "true")
+      // one recorded schema across every leaf is exactly what inference
+      // would return (it reads one footer and assumes the rest agree);
+      // anything else — an unrecorded leaf, mixed schemas — infers
+      (mine.map(l => stats.get(l.dir).flatMap(_.schemaJson)).distinct match {
+        case Seq(Some(json)) =>
+          reader.schema(DataType.fromJson(json).asInstanceOf[StructType])
+        case _ => reader
+      }).parquet(mine.map(l => s"$root/${l.dir}"): _*)
+    }
   }
 
   def leavesAtOrAbove(height: Long): Long => Boolean =
@@ -692,23 +804,18 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
     * takes a point/range lookup from O(commits since compaction) files to
     * O(overlapping leaves) — without opening a single file to decide.
     * Leaves without stats (legacy snapshots, foreign stagers) are kept. */
-  def leavesForHeights(table: String, lo: Long, hi: Long): Seq[Leaf] = {
-    val stats = currentStats()
-    currentLeaves().filter { l =>
-      l.table == physName(table) &&
-        l.bucket >= lo / bucketSize && l.bucket <= hi / bucketSize &&
-        stats.get(l.dir).forall(s =>
-          s.minH.forall(_ <= hi) && s.maxH.forall(_ >= lo))
-    }
-  }
+  def leavesForHeights(table: String, lo: Long, hi: Long): Seq[Leaf] =
+    snapshot().leavesForHeights(table, lo, hi)
 
   /** Snapshot-isolated read of `table` pruned to the leaves whose height
     * range overlaps [lo, hi] — the point-lookup / range-scan entry the
     * view and tail control paths use. Callers still apply their own row
     * filter; this only bounds which files are listed. */
   def readHeightRange(spark: SparkSession, table: String, lo: Long,
-      hi: Long): DataFrame =
-    readLeaves(spark, table, leavesForHeights(table, lo, hi))
+      hi: Long): DataFrame = {
+    val s = snapshot()
+    s.read(spark, table, s.leavesForHeights(table, lo, hi))
+  }
 
   private def emptyLike(spark: SparkSession, table: String): DataFrame = {
     import graft.chain.{Block, TokenTransfer, Transaction}
@@ -734,9 +841,21 @@ final class GraftStore(val root: String, val bucketSize: Long = 10000L,
 object GraftStore {
   /** Thrown by [[GraftStore.commit]] when a drop refers to a leaf that is
     * no longer live — the caller's snapshot went stale under a concurrent
-    * commit. Recompute and retry. */
-  final class StaleSnapshotException(msg: String)
-    extends RuntimeException(msg)
+    * commit. Recompute and retry. `stagedDirs` are the dirs of the leaves
+    * that commit would have added. */
+  final class StaleSnapshotException(msg: String,
+      val stagedDirs: Seq[String] = Nil) extends RuntimeException(msg)
+
+  /** `t` with every field, element and value nullable: the schema a
+    * parquet read returns for data written as `t`. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 
   /** One JVM-wide lock object per canonical store root: serializes
     * commits from DIFFERENT GraftStore instances over the same root

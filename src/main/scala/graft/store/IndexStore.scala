@@ -472,12 +472,13 @@ object IndexStore {
     * escape hatch (its caller owns batch policy). */
   def compact(store: GraftStore, spark: SparkSession, kind: String,
       maxAttempts: Int = 3, dryRun: Boolean = false,
-      incremental: Boolean = false): CompactResult = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      incremental: Boolean = false): CompactResult =
+    // a concurrent commit that dropped one of our victims makes the
+    // commit stale: recompute from a fresh snapshot
+    store.retryOnStale(maxAttempts) {
       val table = tableOf(kind)
-      val old = store.leavesOf(table) // the ONE snapshot resolution
+      val snapshot = store.snapshot() // the ONE resolution
+      val old = snapshot.leavesOf(table)
       require(old.nonEmpty,
         s"no '$table' leaves in store ${store.root} — run `index build` first")
       checkFormat(store, kind)
@@ -491,73 +492,68 @@ object IndexStore {
         }
       val carried = (old.size - victims.size).toLong
       if (victims.isEmpty) // nothing accreted: manifest-only no-op
-        return CompactResult(0L, old.size.toLong, 0L, carried)
-      val live = store.readLeaves(spark, table, victims)
-      val rows = (kind match {
-        // text band rows share the perceptual kinds' at-rest TRUNCATION
-        // policy (keyed on doc_id): compaction may shrink a hot bucket
-        // to its first cap rows but can never erase a committed
-        // survivor's LAST band row — the whole-group drop this case
-        // applied before round 17 could, re-admitting that survivor on
-        // replay (the streaming curation gate's exactly-once argument
-        // needs every accepted doc to self-match at rest)
-        case "band" =>
-          DedupOps.truncateBuckets(live.dropDuplicates("doc_id", "band"),
-            Seq("band", "band_key"), DedupOps.MaxBucketSize,
-            Seq("doc_id"), Seq("doc_id"))
-        case "span" =>
-          DedupOps.capBuckets(live.dropDuplicates("doc_id", "fp"),
-            Seq("fp"), DedupOps.MaxSpanDf)
-        // re-delivered rows collapse; no cap (see rowsFor)
-        case "espan" => live.dropDuplicates("doc_id", "pos")
-        // perceptual kinds: re-delivered assets collapse, then the
-        // at-rest TRUNCATION policy re-applies globally — same
-        // definition as rowsFor, preserving the >=1-row-per-UNIT
-        // liveness the streaming gates' replay self-match needs (a
-        // whole-group drop here could erase a committed survivor's
-        // last band row and re-admit it on replay; a per-ASSET key
-        // could erase a minority chunk/frame's last row and fail the
-        // majority-coverage self-match the same way)
-        case "phash" =>
-          DedupOps.truncateBuckets(
-            live.dropDuplicates("asset_id", "band"),
-            Seq("band", "band_key"), DedupOps.MaxBucketSize,
-            Seq("asset_id"), Seq("asset_id"))
-        case "afp" =>
-          DedupOps.truncateBuckets(
-            live.dropDuplicates("asset_id", "chunk_idx", "band"),
-            Seq("band", "band_key"), DedupOps.MaxBucketSize,
-            Seq("asset_id", "chunk_idx"), Seq("asset_id", "chunk_idx"))
-        case "vhash" =>
-          DedupOps.truncateBuckets(
-            live.dropDuplicates("asset_id", "frame_idx", "band"),
-            Seq("band", "band_key"), DedupOps.MaxBucketSize,
-            Seq("asset_id", "frame_idx"), Seq("asset_id", "frame_idx"))
-        case _ => live.dropDuplicates("vec_id")
-      }).localCheckpoint() // counted AND staged — one computation
-      val dropped = live.count() - rows.count()
-      if (dryRun)
-        return CompactResult(dropped, old.size.toLong,
-          victims.size.toLong, carried)
-      val adds = store.stageKeyed(table, rows, bucketOf(kind), sortOf(kind))
-      try {
-        // preservingMeta: compaction collapses/caps rows, it does not
-        // rewrite them into the newest table schema — re-stamping a
-        // legacy store (e.g. a pre-sq/cq pq codebook) would launder it
-        // past the versioned refusals downstream
-        store.commit(adds, drops = victims,
-          meta = preservingMeta(store, kind))
-        return CompactResult(dropped, carried + adds.size,
-          victims.size.toLong, carried)
-      } catch {
-        case _: GraftStore.StaleSnapshotException if attempt < maxAttempts =>
-        // loop: a concurrent commit dropped one of our victims —
-        // recompute from a fresh snapshot (our staged leaves are
-        // orphans; vacuum reclaims them past the grace window)
+        CompactResult(0L, old.size.toLong, 0L, carried)
+      else {
+        val live = snapshot.read(spark, table, victims)
+        val rows = (kind match {
+          // text band rows share the perceptual kinds' at-rest TRUNCATION
+          // policy (keyed on doc_id): compaction may shrink a hot bucket
+          // to its first cap rows but can never erase a committed
+          // survivor's LAST band row — the whole-group drop this case
+          // applied before round 17 could, re-admitting that survivor on
+          // replay (the streaming curation gate's exactly-once argument
+          // needs every accepted doc to self-match at rest)
+          case "band" =>
+            DedupOps.truncateBuckets(live.dropDuplicates("doc_id", "band"),
+              Seq("band", "band_key"), DedupOps.MaxBucketSize,
+              Seq("doc_id"), Seq("doc_id"))
+          case "span" =>
+            DedupOps.capBuckets(live.dropDuplicates("doc_id", "fp"),
+              Seq("fp"), DedupOps.MaxSpanDf)
+          // re-delivered rows collapse; no cap (see rowsFor)
+          case "espan" => live.dropDuplicates("doc_id", "pos")
+          // perceptual kinds: re-delivered assets collapse, then the
+          // at-rest TRUNCATION policy re-applies globally — same
+          // definition as rowsFor, preserving the >=1-row-per-UNIT
+          // liveness the streaming gates' replay self-match needs (a
+          // whole-group drop here could erase a committed survivor's
+          // last band row and re-admit it on replay; a per-ASSET key
+          // could erase a minority chunk/frame's last row and fail the
+          // majority-coverage self-match the same way)
+          case "phash" =>
+            DedupOps.truncateBuckets(
+              live.dropDuplicates("asset_id", "band"),
+              Seq("band", "band_key"), DedupOps.MaxBucketSize,
+              Seq("asset_id"), Seq("asset_id"))
+          case "afp" =>
+            DedupOps.truncateBuckets(
+              live.dropDuplicates("asset_id", "chunk_idx", "band"),
+              Seq("band", "band_key"), DedupOps.MaxBucketSize,
+              Seq("asset_id", "chunk_idx"), Seq("asset_id", "chunk_idx"))
+          case "vhash" =>
+            DedupOps.truncateBuckets(
+              live.dropDuplicates("asset_id", "frame_idx", "band"),
+              Seq("band", "band_key"), DedupOps.MaxBucketSize,
+              Seq("asset_id", "frame_idx"), Seq("asset_id", "frame_idx"))
+          case _ => live.dropDuplicates("vec_id")
+        }).localCheckpoint() // counted AND staged — one computation
+        val dropped = live.count() - rows.count()
+        if (dryRun)
+          CompactResult(dropped, old.size.toLong, victims.size.toLong,
+            carried)
+        else {
+          val adds = store.stageKeyed(table, rows, bucketOf(kind), sortOf(kind))
+          // preservingMeta: compaction collapses/caps rows, it does not
+          // rewrite them into the newest table schema — re-stamping a
+          // legacy store (e.g. a pre-sq/cq pq codebook) would launder it
+          // past the versioned refusals downstream
+          store.commit(adds, drops = victims,
+            meta = preservingMeta(store, kind))
+          CompactResult(dropped, carried + adds.size,
+            victims.size.toLong, carried)
+        }
       }
     }
-    sys.error("unreachable")
-  }
 
   /** Typed result of [[compact]], shaped like [[PruneResult]]:
     * `dropped` rows left the index (or WOULD, under `dryRun`);
@@ -637,11 +633,12 @@ object IndexStore {
         s"(expected one of ${Kinds.mkString("|")})")
     }
     val tCol = if (tableIdCol.nonEmpty) tableIdCol else idxIdCol
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    // a concurrent commit that dropped one of our leaves makes the
+    // commit stale: recompute from a fresh snapshot
+    store.retryOnStale(maxAttempts) {
       val table = tableOf(kind)
-      val old = store.leavesOf(table) // the ONE snapshot resolution
+      val snapshot = store.snapshot() // the ONE resolution
+      val old = snapshot.leavesOf(table)
       require(old.nonEmpty,
         s"no '$table' leaves in store ${store.root} — run `index build` first")
       require(store.leavesOf(dataTable).nonEmpty,
@@ -649,7 +646,7 @@ object IndexStore {
           "index against an EMPTY table would delete every row; " +
           "drop the index instead if that is intended")
       checkFormat(store, kind)
-      val live = store.readLeaves(spark, table, old)
+      val live = snapshot.read(spark, table, old)
       val keep = store.read(spark, dataTable)
         .select(col(tCol).as(idxIdCol)).distinct()
       // dead-probe FIRST, on the id column alone — plus the LEAF each
@@ -673,52 +670,48 @@ object IndexStore {
         .groupBy("__leafh").count().collect()
       val dropped = perLeaf.map(_.getLong(1)).sum
       if (dropped == 0L)
-        return PruneResult(0L, old.size.toLong, 0L, old.size.toLong)
-      val dirByHash = {
-        import spark.implicits._
-        val m = old.map(_.dir).toDF("dir")
-          .select(xxhash64(col("dir")), col("dir")).collect()
-          .map(r => r.getLong(0) -> r.getString(1)).toMap
-        require(m.size == old.size,
-          s"xxhash64 collision across ${old.size} leaf dirs of " +
-            s"'$table' — run `index build` to re-lay the table")
-        m
-      }
-      val dirtyHashes = perLeaf.map(_.getLong(0)).toSet
-      // every traced leaf must be one of THIS snapshot's — a mismatch
-      // (foreign layout, path surgery) must refuse, not half-rewrite
-      val unknown = dirtyHashes -- dirByHash.keySet
-      require(unknown.isEmpty,
-        s"${unknown.size} dead row group(s) traced to paths outside " +
-          s"the snapshot's leaf list — refusing a partial rewrite; " +
-          "run `index build` to re-lay the table")
-      val dirtyDirs = dirtyHashes.map(dirByHash)
-      val dirty = old.filter(l => dirtyDirs.contains(l.dir))
-      val clean = (old.size - dirty.size).toLong
-      // the dry run IS the dead-probe: counts are exact (one
-      // snapshot), and the rewrite is the only thing skipped
-      if (dryRun)
-        return PruneResult(dropped, old.size.toLong, dirty.size.toLong,
-          clean)
-      // rewrite ONLY the dirty leaves; clean ones carry by reference
-      val rows = store.readLeaves(spark, table, dirty)
-        .join(keep, Seq(idxIdCol), "left_semi")
-        .localCheckpoint() // staged below; count forces materialization
-      rows.count()
-      val adds = store.stageKeyed(table, rows, bucketOf(kind), sortOf(kind))
-      try {
-        // preservingMeta, NOT formatMeta: a filter-only rewrite must
-        // not upgrade the schema stamp of rows it never transformed
-        store.commit(adds, drops = dirty,
-          meta = preservingMeta(store, kind))
-        return PruneResult(dropped, clean + adds.size,
-          dirty.size.toLong, clean)
-      } catch {
-        case _: GraftStore.StaleSnapshotException if attempt < maxAttempts =>
-        // recompute from a fresh snapshot; staged orphans are vacuum's
+        PruneResult(0L, old.size.toLong, 0L, old.size.toLong)
+      else {
+        val dirByHash = {
+          import spark.implicits._
+          val m = old.map(_.dir).toDF("dir")
+            .select(xxhash64(col("dir")), col("dir")).collect()
+            .map(r => r.getLong(0) -> r.getString(1)).toMap
+          require(m.size == old.size,
+            s"xxhash64 collision across ${old.size} leaf dirs of " +
+              s"'$table' — run `index build` to re-lay the table")
+          m
+        }
+        val dirtyHashes = perLeaf.map(_.getLong(0)).toSet
+        // every traced leaf must be one of THIS snapshot's — a mismatch
+        // (foreign layout, path surgery) must refuse, not half-rewrite
+        val unknown = dirtyHashes -- dirByHash.keySet
+        require(unknown.isEmpty,
+          s"${unknown.size} dead row group(s) traced to paths outside " +
+            s"the snapshot's leaf list — refusing a partial rewrite; " +
+            "run `index build` to re-lay the table")
+        val dirtyDirs = dirtyHashes.map(dirByHash)
+        val dirty = old.filter(l => dirtyDirs.contains(l.dir))
+        val clean = (old.size - dirty.size).toLong
+        // the dry run IS the dead-probe: counts are exact (one
+        // snapshot), and the rewrite is the only thing skipped
+        if (dryRun)
+          PruneResult(dropped, old.size.toLong, dirty.size.toLong, clean)
+        else {
+          // rewrite ONLY the dirty leaves; clean ones carry by reference
+          val rows = snapshot.read(spark, table, dirty)
+            .join(keep, Seq(idxIdCol), "left_semi")
+            .localCheckpoint() // staged below; count forces materialization
+          rows.count()
+          val adds = store.stageKeyed(table, rows, bucketOf(kind), sortOf(kind))
+          // preservingMeta, NOT formatMeta: a filter-only rewrite must
+          // not upgrade the schema stamp of rows it never transformed
+          store.commit(adds, drops = dirty,
+            meta = preservingMeta(store, kind))
+          PruneResult(dropped, clean + adds.size, dirty.size.toLong, clean)
+        }
       }
     }
-    sys.error("unreachable")
   }
 
   /** Append index rows for a NEW batch — existing leaves untouched,
@@ -1344,10 +1337,10 @@ object IndexStore {
       kind: String, dataTable: String, th: Double,
       scopeCols: Seq[String], idCol: String, idxKind: String,
       maxAttempts: Int, exclude: Option[DataFrame],
-      dryRun: Boolean): PassOutcome = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      dryRun: Boolean): PassOutcome =
+    // a concurrent commit that dropped one of our leaves makes the
+    // commit stale: recompute from a fresh snapshot
+    store.retryOnStale(maxAttempts) {
       require(store.leavesOf(dataTable).nonEmpty,
         s"no '$dataTable' leaves in store ${store.root}")
       // checkpoint the FULL report (ids + the kind's evidence columns —
@@ -1360,53 +1353,50 @@ object IndexStore {
         case _ => perceptualDupesOn(store, spark, kind, exclude)
       }).localCheckpoint()
       val nPairs = report.count()
-      if (nPairs == 0L) return PassOutcome(0L, 0L, report, None)
-      val pairs = report.select(col("id_a"), col("id_b"))
-      val losers = graft.operators.CurationOps.connectedComponents(pairs)
-        .filter(col("node") =!= col("comp"))
-        .select(col("node").as(idCol))
-        .localCheckpoint() // bucket collect + both anti-joins
-      val nLosers = losers.count()
-      if (dryRun) return PassOutcome(nLosers, nPairs, report, Some(losers))
-      // data side: pruned to the leaf buckets that can hold a loser
-      val loserBuckets = losers
-        .select(pmod(xxhash64(col(idCol)), lit(Buckets.toLong)).as("b"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      val affected = store.leavesOf(dataTable)
-        .filter(l => loserBuckets.contains(l.bucket))
-      val dataAdds =
-        if (affected.isEmpty) Nil
-        else store.stageKeyed(dataTable,
-          store.readLeaves(spark, dataTable, affected)
-            .join(losers, Seq(idCol), "left_anti"),
-          pmod(xxhash64(col(idCol)), lit(Buckets.toLong)),
-          Seq(col(idCol)))
-      // index side: whole-table rewrite (rows keyed by band-key hash)
-      val idxTable = tableOf(idxKind)
-      val idxLeaves = store.leavesOf(idxTable)
-      val idxIdCol = kind match {
-        case "band" => "doc_id"
-        case "vec" => "vec_id"
-        case _ => "asset_id"
-      }
-      val idxAdds = store.stageKeyed(idxTable,
-        store.readLeaves(spark, idxTable, idxLeaves)
-          .join(losers.select(col(idCol).as(idxIdCol)),
-            Seq(idxIdCol), "left_anti"),
-        bucketOf(idxKind), sortOf(idxKind))
-      try {
-        // preservingMeta: the apply anti-joins index rows out, it does
-        // not rewrite them into the newest table schema — no upgrade
-        store.commit(dataAdds ++ idxAdds, drops = affected ++ idxLeaves,
-          meta = preservingMeta(store, idxKind))
-        return PassOutcome(nLosers, nPairs, report, Some(losers))
-      } catch {
-        case _: GraftStore.StaleSnapshotException if attempt < maxAttempts =>
-        // recompute from a fresh snapshot; staged orphans are vacuum's
+      if (nPairs == 0L) PassOutcome(0L, 0L, report, None)
+      else {
+        val pairs = report.select(col("id_a"), col("id_b"))
+        val losers = graft.operators.CurationOps.connectedComponents(pairs)
+          .filter(col("node") =!= col("comp"))
+          .select(col("node").as(idCol))
+          .localCheckpoint() // bucket collect + both anti-joins
+        val nLosers = losers.count()
+        if (dryRun) PassOutcome(nLosers, nPairs, report, Some(losers))
+        else {
+          // data side: pruned to the leaf buckets that can hold a loser
+          val loserBuckets = losers
+            .select(pmod(xxhash64(col(idCol)), lit(Buckets.toLong)).as("b"))
+            .distinct().collect().map(_.getLong(0)).toSet
+          val affected = store.leavesOf(dataTable)
+            .filter(l => loserBuckets.contains(l.bucket))
+          val dataAdds =
+            if (affected.isEmpty) Nil
+            else store.stageKeyed(dataTable,
+              store.readLeaves(spark, dataTable, affected)
+                .join(losers, Seq(idCol), "left_anti"),
+              pmod(xxhash64(col(idCol)), lit(Buckets.toLong)),
+              Seq(col(idCol)))
+          // index side: whole-table rewrite (rows keyed by band-key hash)
+          val idxTable = tableOf(idxKind)
+          val idxLeaves = store.leavesOf(idxTable)
+          val idxIdCol = kind match {
+            case "band" => "doc_id"
+            case "vec" => "vec_id"
+            case _ => "asset_id"
+          }
+          val idxAdds = store.stageKeyed(idxTable,
+            store.readLeaves(spark, idxTable, idxLeaves)
+              .join(losers.select(col(idCol).as(idxIdCol)),
+                Seq(idxIdCol), "left_anti"),
+            bucketOf(idxKind), sortOf(idxKind))
+          // preservingMeta: the apply anti-joins index rows out, it does
+          // not rewrite them into the newest table schema — no upgrade
+          store.commit(dataAdds ++ idxAdds, drops = affected ++ idxLeaves,
+            meta = preservingMeta(store, idxKind))
+          PassOutcome(nLosers, nPairs, report, Some(losers))
+        }
       }
     }
-    sys.error("unreachable")
-  }
 
   /** Semantic decontamination of a benchmark against the at-rest `pq`
     * index — [[graft.operators.SimilarityOps.semanticContamination]]

@@ -37,9 +37,9 @@ object JdbcSink {
       prefix: String = "etl",
       mode: SaveMode = SaveMode.Overwrite,
       properties: Properties = new Properties()): Map[String, Long] = {
-    val snapshot = store.currentLeaves() // one snapshot for ALL tables
+    val snapshot = store.snapshot() // one snapshot for ALL tables
     store.Tables.map { table =>
-      val df = store.readLeaves(spark, table, snapshot)
+      val df = snapshot.read(spark, table, snapshot.leaves)
       df.write.mode(mode).jdbc(url, s"${prefix}_$table", properties)
       table -> df.count()
     }.toMap

@@ -310,6 +310,42 @@ class EtlSpec extends AnyFunSuite with BeforeAndAfterAll
       .agg(max("number")).head().getLong(0) == 20L)
   }
 
+  test("rollback retries from a fresh snapshot when a compaction commits " +
+      "between its leaf list and its commit") {
+    val store = newStore()
+    val src = new FixtureSource(fx)
+    // two ingests split bucket 2 (heights 100-149) into two leaves per
+    // table, so a compaction rewrites that bucket
+    Backfill.run(spark, src, store, 0, 119)
+    Backfill.run(spark, src, store, 120, 199)
+    var retired = 0
+    // the rollback's first write (its blocks rewrite) runs after it took
+    // its leaf lists and before its commit: the compaction lands there
+    // and drops the bucket-2 leaf the rollback is about to drop
+    HookedCommitProtocol.afterFirstWrite(spark) {
+      retired = graft.etl.Export.compact(spark, store)
+    } {
+      Tail.rollbackFrom(spark, store, 130L)
+    }
+    assert(retired > 0, "the compaction never landed inside the rollback")
+    assert(store.currentMeta()(store.metaKey("tip")) == "129")
+    assert(Backfill.maxIngestedHeight(spark, store) == 129L)
+    val blocks = store.read(spark, "blocks").select("number", "hash")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(blocks == fx.blocks.filter(_.number < 130)
+      .map(b => (b.number, b.hash)).toSet)
+    val txs = store.read(spark, "transactions").select("hash")
+      .collect().map(_.getString(0)).toSet
+    assert(txs == fx.transactions.filter(_.block_number < 130)
+      .map(_.hash).toSet)
+    val transfers = store.read(spark, "token_transfers")
+      .select("tx_hash", "transfer_index").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(transfers == fx.goldenTransfers.map(_._1)
+      .filter(_.block_number < 130)
+      .map(t => (t.tx_hash, t.transfer_index)).toSet)
+  }
+
   test("compaction snapshot ignores leaves committed after it was taken") {
     val store = newStore()
     val src = new FixtureSource(fx)

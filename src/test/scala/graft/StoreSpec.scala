@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.store.GraftStore
+import graft.store.{GraftStore, IndexStore}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
@@ -103,6 +103,33 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(live == Set(20L), s"rewrite race left wrong state: $live")
   }
 
+  test("retryOnStale reruns a stale attempt and forgets the stats of " +
+      "the leaves that attempt staged") {
+    val root = tempDir("graft-store-retry")
+    val store = new GraftStore(root)
+    commitKeyed(store, "t", rows(1L, 2L))
+    val baseline = store.leavesOf("t")
+    // a concurrent rewrite retires the leaves the first attempt drops
+    store.commit(store.stageKeyed("t", rows(3L), pmod(col("k"), lit(4L)),
+      Seq(col("k"))), drops = baseline)
+    var aborted = Seq.empty[store.Leaf]
+    var attempts = 0
+    store.retryOnStale(maxAttempts = 2) {
+      attempts += 1
+      if (attempts == 1) {
+        aborted = store.stageKeyed("t", rows(10L), pmod(col("k"), lit(4L)),
+          Seq(col("k")))
+        store.commit(aborted, drops = baseline)
+      } else // adopting the aborted leaves shows their stats were dropped
+        store.commit(aborted, drops = store.leavesOf("t"))
+    }
+    assert(attempts == 2)
+    assert(store.read(spark, "t").select("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(10L))
+    val stats = store.currentStats()
+    assert(aborted.nonEmpty && aborted.forall(l => !stats.contains(l.dir)))
+  }
+
   test("time travel: a historic snapshot replays its exact version") {
     val root = tempDir("graft-store-tt")
     val store = new GraftStore(root)
@@ -122,6 +149,36 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(then_ == Set(1L, 2L))
   }
 
+  /** The schema Spark infers for `table`'s live leaves — the read
+    * [[GraftStore]] made before it recorded schemas. */
+  private def inferred(store: GraftStore, table: String) =
+    spark.read.option("recursiveFileLookup", "true")
+      .parquet(store.leavesOf(table).map(l => s"${store.root}/${l.dir}"): _*)
+      .schema
+
+  /** Every live leaf of `table` carries one recorded schema, equal to the
+    * inferred one, and the store's read returns it. */
+  private def assertSchemaRecorded(store: GraftStore, table: String): Unit = {
+    val stats = store.currentStats()
+    val recorded = store.leavesOf(table).map(l => stats(l.dir).schemaJson)
+    assert(recorded.nonEmpty && recorded.distinct.size == 1 &&
+      recorded.head.isDefined, s"$table: recorded schemas $recorded")
+    assert(recorded.head.get == inferred(store, table).json,
+      s"$table: recorded ${recorded.head.get} vs inferred " +
+        inferred(store, table).json)
+    assert(store.read(spark, table).schema == inferred(store, table))
+  }
+
+  /** Spark jobs a committed point lookup at `h` runs: 1 with a recorded
+    * schema, 2 when the read first infers it. */
+  private def lookupJobs(store: GraftStore, h: Long): Int =
+    SparkJobs.count(spark) {
+      assert(store.readHeightRange(spark, "blocks", h, h)
+        .filter(col("number") === h).collect().length == 1)
+    }
+
+  // also covers the schema record: recorded schemas skip inference;
+  // legacy manifests, mixed schemas and foreign-staged leaves infer
   test("manifest footer stats prune height reads below bucket " +
       "granularity; a stats-free legacy manifest falls back to keeping " +
       "every leaf") {
@@ -155,12 +212,65 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
       .inputFiles.length < store.read(spark, "blocks").inputFiles.length)
     // a range spanning two leaves keeps exactly those
     assert(store.leavesForHeights("blocks", 5L, 102L).size == 2)
-    // stats ride through a commit that doesn't touch the table
+    // stats and schemas ride through a commit that doesn't touch the
+    // table
     commitKeyed(store, "other", rows(1L))
     assert(store.leavesForHeights("blocks", 105L, 105L).size == 1)
+    // every leaf records the schema inference would return, so a
+    // committed point lookup is one Spark job: the query's own
+    assertSchemaRecorded(store, "blocks")
+    assert(lookupJobs(store, 105L) == 1)
+    // historic snapshots, leavesAt and vacuum parse the schema lines;
+    // readAt takes the schema from its own snapshot
+    val v1 = store.currentSnapshot().get
+    assert(store.leavesAt(v1).toSet == store.currentLeaves().toSet)
+    assert(store.readAt(spark, "blocks", v1).schema ==
+      inferred(store, "blocks"))
+    assert(store.readAt(spark, "blocks", v1).count() == 30L)
+    commitKeyed(store, "other", rows(2L))
+    assert(store.vacuum(keepSnapshots = 2, graceMs = 0L) == 0L)
+    assert(store.readAt(spark, "blocks", v1).count() == 30L)
+
+    // leaves staged by ANOTHER instance carry no stats or schema in the
+    // committing instance: kept by every height read and inferred
+    val foreign = new GraftStore(root).stage("blocks", blocksDf(300L, 309L))
+      .map(l => store.Leaf(l.table, l.bucket, l.dir))
+    store.commit(foreign)
+    assert(foreign.forall(l => !store.currentStats().contains(l.dir)))
+    assert(store.leavesForHeights("blocks", 105L, 105L).size == 2)
+    assert(store.read(spark, "blocks").schema == inferred(store, "blocks"))
+    assert(store.read(spark, "blocks").count() == 40L)
+    assert(lookupJobs(store, 105L) == 2)
+    assert(lookupJobs(store, 305L) == 2)
+    store.commit(Nil, drops = foreign)
+    assert(lookupJobs(store, 105L) == 1)
+
+    // leaves whose recorded schemas differ read as before: Spark infers
+    val wide = store.stage("blocks", blocksDf(400L, 409L)
+      .withColumn("extra", lit(7)))
+    store.commit(wide)
+    val schemas = store.currentStats().values.flatMap(_.schemaJson).toSet
+    assert(schemas.size == 3, s"expected blocks, wide and other: $schemas")
+    assert(store.read(spark, "blocks").schema == inferred(store, "blocks"))
+    assert(store.read(spark, "blocks").count() == 40L)
+    store.commit(Nil, drops = wide)
+    assertSchemaRecorded(store, "blocks")
+
+    // a manifest written before schemas were recorded (stats lines of
+    // five fields, no dictionary): stats still prune, schemas infer
+    val snap = Paths.get(root).resolve(store.currentSnapshot().get)
+    val lines = Files.readAllLines(snap).asScala.toSeq
+    assert(lines.exists(_.startsWith("#schema\t")))
+    Files.write(snap, lines.filterNot(_.startsWith("#schema\t")).map(l =>
+      if (l.startsWith("#stats\t")) l.split("\t", -1).take(5).mkString("\t")
+      else l).asJava)
+    val noSchema = new GraftStore(root)
+    assert(noSchema.currentStats().values.forall(_.schemaJson.isEmpty))
+    assert(noSchema.leavesForHeights("blocks", 105L, 105L).size == 1)
+    assert(noSchema.read(spark, "blocks").schema == inferred(store, "blocks"))
+    assert(lookupJobs(noSchema, 105L) == 2)
     // legacy manifest without #stats lines (a pre-stats store): nothing
     // is pruned away and reads stay correct
-    val snap = Paths.get(root).resolve(store.currentSnapshot().get)
     Files.write(snap, Files.readAllLines(snap).asScala
       .filterNot(_.startsWith("#stats")).asJava)
     val legacy = new GraftStore(root)
@@ -168,6 +278,29 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(legacy.leavesForHeights("blocks", 105L, 105L).size == 3)
     assert(legacy.readHeightRange(spark, "blocks", 105L, 105L)
       .filter(col("number") === 105L).count() == 1)
+    assert(lookupJobs(legacy, 105L) == 2)
+    // the next commit by a current writer keeps the legacy leaves
+    // stats-free and records schemas only for what it staged
+    legacy.commit(legacy.stage("blocks", blocksDf(500L, 509L)))
+    assert(legacy.currentStats().size == 1)
+    assert(legacy.read(spark, "blocks").count() == 40L)
+
+    // the chain tables as ingest writes them (transfers in address
+    // sub-directories, and z-ordered) and a keyed index table
+    val fx = graft.chain.ChainFixture.build(60)
+    Seq(false, true).foreach { z =>
+      val chain = new GraftStore(tempDir(s"graft-store-schema-z$z"),
+        bucketSize = 20L, zOrderTransfers = z)
+      graft.etl.Backfill.run(spark, new graft.etl.FixtureSource(fx), chain,
+        0, 59)
+      chain.Tables.foreach(assertSchemaRecorded(chain, _))
+      assert(lookupJobs(chain, 42L) == 1)
+    }
+    val idx = new GraftStore(tempDir("graft-store-schema-idx"))
+    IndexStore.build(idx, "band", (0L until 20L)
+      .map(i => (i, s"doc $i about the quick brown fox jumps $i"))
+      .toDF("doc_id", "text"))
+    assertSchemaRecorded(idx, IndexStore.tableOf("band"))
   }
 
   test("incremental read between snapshots: appends surface whole, " +

@@ -3,6 +3,7 @@ package graft
 import java.io.{DataInputStream, DataOutputStream}
 import java.net.ServerSocket
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Minimal RFC 6455 loopback server shared by the WebSocket specs (the
@@ -15,15 +16,32 @@ import java.util.concurrent.atomic.AtomicInteger
   * returning false drops the connection ABRUPTLY after handling (no
   * close frame — disconnect injection). `refuseFirst` connections are
   * closed before the handshake (connect-retry injection). Connection
-  * indexes count accepted handshakes from 0. */
+  * indexes count accepted handshakes from 0.
+  *
+  * Specs wait on server-side events instead of the clock: [[handled]]
+  * ticks once a client text frame has been handled (its replies are on
+  * the wire). With `syncPings` the server follows every handled frame
+  * with a ping; the client's pong ticks [[synced]]. A client hands
+  * messages to its listener in order and answers a ping after the
+  * messages before it, so the n-th sync means every frame sent before the
+  * n-th ping has reached the client's listener. A connection the handler
+  * drops is then closed only after that pong: whatever the handler sent
+  * reached the client before the drop. [[pinged]] ticks on each client
+  * ping; with `pongGate` the server answers pings only once that latch
+  * is open (late-pong injection). */
 final class TinyWsServer(
     handler: (Int, String, String => Unit) => Boolean,
-    refuseFirst: Int = 0) extends AutoCloseable {
+    refuseFirst: Int = 0, syncPings: Boolean = false,
+    pongGate: Option[CountDownLatch] = None) extends AutoCloseable {
   private val refusals = new AtomicInteger(refuseFirst)
   private val connCount = new AtomicInteger(0)
   private val server = new ServerSocket(0, 8,
     java.net.InetAddress.getByName("127.0.0.1"))
   val url = s"ws://127.0.0.1:${server.getLocalPort}/"
+
+  val handled = new TinyWsServer.Events
+  val synced = new TinyWsServer.Events
+  val pinged = new TinyWsServer.Events
 
   private val acceptor = new Thread(() => {
     try while (!server.isClosed) {
@@ -61,6 +79,7 @@ final class TinyWsServer(
     out.flush()
     // --- frame loop ---
     var open = true
+    var dropOnPong = false
     while (open) {
       val b0 = in.read()
       if (b0 == -1) open = false
@@ -82,14 +101,27 @@ final class TinyWsServer(
         opcode match {
           case 0x1 => // text → the pluggable handler
             val text = new String(payload, StandardCharsets.UTF_8)
-            if (!handler(connIdx, text, t => sendText(out, t)))
-              open = false // abrupt drop, no close frame
+            val keep = handler(connIdx, text, t => sendText(out, t))
+            if (syncPings) out.synchronized {
+              out.write(0x89); out.write(0); out.flush()
+            }
+            // abrupt drop, no close frame: at once, or after the sync
+            if (!keep) { if (syncPings) dropOnPong = true else open = false }
+            handled.tick()
           case 0x8 => // close: echo and finish
             out.write(Array(0x88.toByte, 0x00.toByte)); out.flush()
             open = false
           case 0x9 => // ping → pong
-            out.write(0x8a); out.write(payload.length)
-            out.write(payload); out.flush()
+            pinged.tick()
+            pongGate.foreach(g =>
+              require(g.await(2, TimeUnit.MINUTES), "pong gate never opened"))
+            out.synchronized {
+              out.write(0x8a); out.write(payload.length)
+              out.write(payload); out.flush()
+            }
+          case 0xa => // pong to a sync ping
+            synced.tick()
+            if (dropOnPong) open = false
           case _ => ()
         }
       }
@@ -109,4 +141,24 @@ final class TinyWsServer(
     }
 
   override def close(): Unit = server.close()
+}
+
+object TinyWsServer {
+  /** A count of server events; the n-th tick trips the latch [[await]]
+    * (n) blocks on. */
+  final class Events {
+    private val count = new AtomicInteger(0)
+    private val latches = new ConcurrentHashMap[Int, CountDownLatch]()
+    private def latch(n: Int) =
+      latches.computeIfAbsent(n, _ => new CountDownLatch(1))
+
+    private[graft] def tick(): Unit = latch(count.incrementAndGet()).countDown()
+
+    def seen: Int = count.get
+
+    /** Blocks until the n-th event; the bound only turns a hang into a
+      * failure. */
+    def await(n: Int): Unit =
+      require(latch(n).await(2, TimeUnit.MINUTES), s"event $n never came")
+  }
 }

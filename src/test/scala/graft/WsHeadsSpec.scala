@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.CountDownLatch
 
 import graft.chain.ChainFixture
 import graft.etl.{RpcCodec, WsHeads}
@@ -20,7 +21,15 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - subscribe → ack → pushed notifications arrive in order;
   *  - the streaming heads source in push mode (`wsUrl` arrival signal
   *    + `apiUrl` data plane) collects every fixture head;
-  *  - connect retry against a server that refuses first connections.
+  *  - connect retry against a server that refuses first connections;
+  *  - a dropped connection is replaced, and a late pong is not mistaken
+  *    for one.
+  *
+  * Every wait is on a server-side event ([[TinyWsServer.handled]],
+  * [[TinyWsServer.synced]], [[TinyWsServer.pinged]]), never on a
+  * deadline: once the server has seen the pong to the ping it sent
+  * after a subscribe, every header it pushed before that ping sits in
+  * the client's queue.
   */
 class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
     with TempDirCleanup {
@@ -50,31 +59,34 @@ class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
   /** A pubsub node on the shared [[TinyWsServer]]: on `*_subscribe` it
     * acks with a subscription id and pushes that connection's headers
     * (`pushByConnection` override, else `pushOnSubscribe`); connections
-    * in `dropConnections` are dropped abruptly right after pushing. */
+    * in `dropConnections` are dropped abruptly once the client has
+    * answered the sync ping that follows the pushes. */
   private def subscribeServer(pushOnSubscribe: Seq[String],
       refuseFirst: Int = 0,
       pushByConnection: Map[Int, Seq[String]] = Map.empty,
-      dropConnections: Set[Int] = Set.empty): TinyWsServer =
+      dropConnections: Set[Int] = Set.empty,
+      pongGate: Option[CountDownLatch] = None): TinyWsServer =
     new TinyWsServer((connIdx, text, send) => {
       if (text.contains("_subscribe")) {
         send("""{"jsonrpc":"2.0","id":1,"result":"0xfeed01"}""")
         pushByConnection.getOrElse(connIdx, pushOnSubscribe).foreach(send)
         !dropConnections(connIdx)
       } else true
-    }, refuseFirst)
+    }, refuseFirst, syncPings = true, pongGate = pongGate)
+
+  private def number(h: JValue): Long = RpcCodec.hexToLong(
+    h \ "number" match { case JString(s) => s; case _ => "" })
 
   test("subscribe, ack, and pushed newHeads arrive in order") {
     val srv = subscribeServer(fx.blocks.take(5).map(headerJson))
     servers += srv
     val ws = new WsHeads(srv.url)
     try {
-      val got = Iterator.continually(ws.pollHeaders(waitMs = 2000))
-        .take(10).flatten.take(5).toSeq
+      srv.synced.await(1) // the ack and all five pushes reached the client
+      val got = ws.pollHeaders()
       assert(got.size == 5, s"expected 5 pushed headers, got ${got.size}")
       assert(ws.subscription.contains("0xfeed01"))
-      assert(got.map(h => RpcCodec.hexToLong(
-        h \ "number" match { case JString(s) => s; case _ => "" })) ==
-        (0L until 5L))
+      assert(got.map(number) == (0L until 5L))
       assert(got.map(h => RpcCodec.unhexField(h \ "hash")) ==
         fx.blocks.take(5).map(_.hash))
     } finally ws.close()
@@ -84,8 +96,11 @@ class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
     val srv = subscribeServer(Nil, refuseFirst = 2)
     servers += srv
     val ws = new WsHeads(srv.url, retryBackoffMs = 50L)
-    try assert(ws.pollHeaders(waitMs = 10) == Nil) // connected, no pushes
-    finally ws.close()
+    try {
+      srv.synced.await(1) // subscribed on the third connection
+      assert(ws.subscription.contains("0xfeed01"))
+      assert(ws.pollHeaders() == Nil) // connected, no pushes
+    } finally ws.close()
   }
 
   test("dropped connection: pollHeaders reconnects and resubscribes " +
@@ -95,28 +110,46 @@ class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
       pushByConnection = Map(0 -> headers.take(3), 1 -> headers.drop(3)),
       dropConnections = Set(0))
     servers += srv
-    val ws = new WsHeads(srv.url, retryBackoffMs = 50L)
+    // a short heartbeat: the JDK client may never report the drop, and
+    // then only the unanswered heartbeat ping reveals it
+    val ws = new WsHeads(srv.url, retryBackoffMs = 50L, heartbeatMs = 100L)
     try {
-      // connection 0 pushes heads 0-2 then drops the socket abruptly
-      val first = Iterator.continually(ws.pollHeaders(waitMs = 2000))
-        .take(10).flatten.take(3).toSeq
-      assert(first.size == 3, s"expected 3 heads before the drop")
-      // subsequent polls must notice the dead connection, reconnect and
-      // resubscribe (connection 1 pushes heads 3-4 on subscribe). The
-      // deadline is generous — the loop exits on success, so its only
-      // cost is on genuine failure — because a loaded box (parallel
-      // suites + external load) can starve the reconnect for seconds
-      // and a wall-clock flake here would misreport the retry logic
-      val deadline = System.currentTimeMillis() + 30000
-      var rest = Seq.empty[JValue]
-      while (rest.size < 2 && System.currentTimeMillis() < deadline)
-        rest = rest ++ ws.pollHeaders(waitMs = 500)
-      assert(rest.size == 2,
-        s"reconnect did not resubscribe: got ${rest.size} post-drop heads")
-      assert((first ++ rest).map(h => RpcCodec.hexToLong(
-        h \ "number" match { case JString(s) => s; case _ => "" })) ==
-        (0L until 5L))
+      // connection 0 pushes heads 0-2, and drops the socket abruptly once
+      // the client has answered the sync ping after them: all three
+      // reached the client before the drop
+      srv.synced.await(1)
+      val first = ws.pollHeaders()
+      // a waiting poll must notice the dead connection (from the client's
+      // close callbacks or from its heartbeat), reconnect and resubscribe;
+      // connection 1 then pushes heads 3-4. The wait only bounds a hang.
+      val rest = ws.pollHeaders(waitMs = 120000L).toBuffer
+      srv.synced.await(2) // connection 1's heads have all arrived
+      rest ++= ws.pollHeaders()
+      assert((first ++ rest).map(number) == (0L until 5L),
+        s"heads across the reconnect: ${(first ++ rest).map(number)}")
     } finally ws.close()
+  }
+
+  test("a pong later than the heartbeat but within its timeout keeps the " +
+      "connection") {
+    val pongs = new CountDownLatch(1)
+    val srv = subscribeServer(Nil, pongGate = Some(pongs))
+    servers += srv
+    val ws = new WsHeads(srv.url, heartbeatMs = 200L) // pong timeout 3 s
+    try {
+      srv.synced.await(1) // subscribed
+      // silent for six heartbeats: a poll pings after the first, and the
+      // server holds the pong until the last
+      ws.pollHeaders(waitMs = 1200L)
+      srv.pinged.await(1)
+      pongs.countDown()
+      // wait out the first ping's pong timeout: had its late pong not
+      // counted, the client would have reconnected by now
+      ws.pollHeaders(waitMs = 3500L)
+      assert(srv.handled.seen == 1, "a late pong caused a reconnect")
+      assert(srv.pinged.seen > 1, "the heartbeat stopped after a late pong")
+      assert(ws.pollHeaders() == Nil)
+    } finally { pongs.countDown(); ws.close() }
   }
 
   test("heads stream in push mode: WS arrival signal + HTTP data plane " +
@@ -159,14 +192,13 @@ class WsHeadsSpec extends AnyFunSuite with BeforeAndAfterAll
         .option("checkpointLocation", tempDir("graft-ws-heads-ckpt"))
         .start()
       try {
-        // push arrival is asynchronous: keep draining until all 40 land
-        val deadline = System.currentTimeMillis() + 30000
-        var n = 0L
-        while (n < 40 && System.currentTimeMillis() < deadline) {
-          q.processAllAvailable()
-          n = spark.table("ws_heads").count()
-          if (n < 40) Thread.sleep(100)
-        }
+        // the stream subscribed and every pushed head reached its queue,
+        // so every trigger from now on releases them. One that was
+        // already running when the sync landed may end the first wait
+        // early; the second wait then sees a trigger that started after.
+        wsSrv.synced.await(1)
+        q.processAllAvailable()
+        if (spark.table("ws_heads").count() < 40) q.processAllAvailable()
       } finally q.stop()
       val got = spark.table("ws_heads").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
